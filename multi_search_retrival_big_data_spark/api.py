@@ -14,9 +14,25 @@ query they run today against the Spark engine:
 | GET  /data                    | browse               | Q23 |
 | (beyond-ref) hybrid /search   | diverse_search       | RRF + MMR |
 
-Every method returns a lazy DataFrame (the caller collects/serializes);
-nothing here adds logic — it only composes the operators, mirroring the
-reference's fixed call tree (SURVEY.md §3) as a Catalyst plan.
+Every method composes the operators along the reference's fixed call
+tree (SURVEY.md §3) and returns a DataFrame the caller collects or
+serializes. A request is compiled on the driver into one distributed
+HEAD over the corpus or an index, cut at a top-k, plus an exact TAIL
+over the request-sized rows that head returns:
+
+- request-sized inputs (query term weights, query vectors, votes, a
+  fused candidate list) enter the head's plan as literals, and the
+  request id filters are broadcast into its scan;
+- the tails (multichannel min-max fusion, RRF, MMR's similarities and
+  greedy) run on the driver and replay the in-plan quantized
+  arithmetic bit for bit, so the oracles still hold;
+- a tail's page comes back as a local relation, so reading it runs no
+  further Spark job.
+
+Some methods therefore run their head's jobs before returning (the
+construct phase), and return an already-computed page: text_search ≤ 2
+jobs in all, feedback ≤ 3, panel_search ≤ 4, diverse_search ≤ 5
+(pinned by tests/test_api.py).
 
 Corpus mapping onto the driver's synthetic tables: `embeddings` is the
 dense index (vec_id ≙ keyframe id), `label` its grouping dimension
@@ -62,6 +78,7 @@ class SearchEngine:
         self._postings = index_store.multichannel_postings(
             spark, sf_dir, {"bbox": (1, 1), "color": (1, 1), "tag": (1, 1), "number": (1, 1)}
         )
+        self._tfidf = index_store.tfidf_postings(spark, sf_dir)
 
     # -- /textsearch -------------------------------------------------
     def text_search(
@@ -74,36 +91,41 @@ class SearchEngine:
         group: bool = True,
     ) -> DataFrame:
         """Q21 translate → Q1 encode+top-k (dual-model Q13 ensemble =
-        two encoders fused by Q8) with Q14 id algebra, grouped Q15."""
+        two encoders fused by Q8) with Q14 id algebra, grouped Q15.
+
+        One scan: the id filters are broadcast into it, `label` rides
+        through the top-k (no hydration re-join), and the grouping runs
+        on the top-k's single output partition (no exchange)."""
         qv = encoders.encode_query(text, self.encoder, self.translator)
-        subset = None
-        if keep_ids is not None or ignore_ids is not None:
-            subset = filters.build_search_space(
-                self.emb.select("vec_id"),
-                "vec_id",
-                group_cols=["vec_id"],
-                ignore_ids=ignore_ids,
-                keep_ids=keep_ids,
+        filtered = keep_ids is not None or ignore_ids is not None
+        base = (
+            filters.build_search_space(
+                self.emb, "vec_id", ["vec_id"], ignore_ids=ignore_ids, keep_ids=keep_ids
             )
+            if filtered
+            else self.emb
+        )
+        carry = ["label"] if group and not ensemble else []
 
         def _score(vec):
             # unfiltered scans take the Arrow/NumPy scorer (the
             # high-dimension strategy — one BLAS matvec per batch);
-            # subset searches keep the Catalyst fold so the semi-join
-            # prunes BEFORE scoring
-            if subset is None:
-                return dense.topk_cosine_arrow(self.emb, vec, k=k, round_to=6)
-            return dense.topk_cosine(self.emb, vec, k=k, subset=subset, round_to=6)
+            # filtered searches keep the Catalyst fold, scoring only
+            # the rows the broadcast filters let through
+            if filtered:
+                return dense.topk_cosine(base, vec, k=k, round_to=6, carry=carry)
+            return dense.topk_cosine_arrow(base, vec, k=k, round_to=6, carry=carry)
 
         hits = _score(qv)
         if ensemble:
             qv2 = encoders.encode_query(text[::-1], self.encoder, self.translator)
             hits = fusion.merge_by_addition([hits, _score(qv2)], k=k, round_to=6)
             hits = hits.withColumnRenamed("id", "vec_id")
+            if group:
+                hits = grouping.hydrate(hits, self.emb, "vec_id", ["label"])
         if not group:
             return hits
-        hydrated = grouping.hydrate(hits, self.emb, "vec_id", ["label"])
-        return grouping.group_hits(hydrated, ["label"], "vec_id")
+        return grouping.group_hits(hits, ["label"], "vec_id")
 
     # -- /imgsearch --------------------------------------------------
     def image_search(self, query_id: int, k: int = 50) -> DataFrame:
@@ -124,7 +146,7 @@ class SearchEngine:
             if toks
         }
         if not channel_qterms:
-            return self.spark.createDataFrame([], "doc_id BIGINT, score DOUBLE")
+            return tables.local(self.spark, [], "doc_id BIGINT, score DOUBLE")
         hits = sparse.multichannel_tfidf_score(
             self._postings, channel_qterms, k_per_channel=k, k=k, round_to=6
         )
@@ -137,7 +159,11 @@ class SearchEngine:
     def feedback(
         self, prev_hits: DataFrame, pos_ids: list[int], neg_ids: list[int], k: int = 50
     ) -> DataFrame:
-        votes = self.spark.createDataFrame(
+        """Q3 — Rocchio rerank of the previous page. Votes on ids the
+        corpus lacks contribute nothing; with none resolvable the page
+        comes back in its own order, delta 0 (dense.rocchio_rerank)."""
+        votes = tables.local(
+            self.spark,
             [(i, 1.0) for i in pos_ids] + [(i, -1.0) for i in neg_ids],
             "vec_id BIGINT, sign DOUBLE",
         )
@@ -173,13 +199,16 @@ class SearchEngine:
     ) -> DataFrame:
         """The modern serving tail the reference's endpoints imply but
         don't compose: sparse TF-IDF and dense lists fused by
-        reciprocal rank (scale-free), the fused top-n hydrated with
-        vectors (broadcast into the corpus join), and an MMR page of k
+        reciprocal rank (scale-free), the fused top-n fetched with
+        vectors and fused scores as literals, and an MMR page of k
         diversified hits. `query_vec` overrides the encoder seam for
         callers that already hold an embedding (the /imgsearch
-        shape)."""
+        shape). Heads: the sparse idf lookup, both top-100 lists in
+        one collect, the candidate-vector fetch; tails: RRF and MMR on
+        the driver."""
         from pyspark.sql import functions as F
 
+        from multi_search_retrival_big_data_spark.functions.vector import lit_lookup
         from multi_search_retrival_big_data_spark.operators import rerank
 
         qv = (
@@ -187,18 +216,13 @@ class SearchEngine:
             if query_vec is not None
             else encoders.encode_query(text, self.encoder, self.translator)
         )
-        sp = sparse.tfidf_score(
-            index_store.tfidf_postings(self.spark, self.sf_dir),
-            sparse.query_terms(text),
-            k=100,
-            round_to=6,
-        )
+        sp = sparse.tfidf_score(self._tfidf, sparse.query_terms(text), k=100, round_to=6)
         dn = dense.topk_cosine_arrow(self.emb, qv, k=100, round_to=6)
-        fused = fusion.reciprocal_rank_fusion([sp, dn], k=n_fuse)
-        cand = (
-            self.emb.select("vec_id", "embedding")
-            .join(F.broadcast(fused.withColumnRenamed("id", "vec_id")), "vec_id")
-            .select("vec_id", "embedding", F.col("score").alias("rel"))
+        fused = dict(fusion.rrf_rows([sp, dn], k=n_fuse))
+        cand = self.emb.filter(F.col("vec_id").isin(sorted(fused))).select(
+            "vec_id",
+            "embedding",
+            lit_lookup(["vec_id"], {(i,): s for i, s in fused.items()}).alias("rel"),
         )
         if lam is None:
             return rerank.mmr_rerank(cand, k=k)

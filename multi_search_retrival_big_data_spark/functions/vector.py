@@ -15,7 +15,8 @@ double) regardless of the stored FLOAT element type.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
+from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -31,6 +32,20 @@ def lit_vec(values: Sequence[float]) -> Column:
     """A literal query vector as ARRAY<DOUBLE> (broadcast to executors
     inside the plan — the Spark analogue of handing FAISS a query row)."""
     return F.array(*[F.lit(float(v)) for v in values])
+
+
+def lit_lookup(keys: Sequence[ColumnOrName], values: Mapping[tuple, float]) -> Column:
+    """A request-sized sparse vector as literals: CASE WHEN keys = k
+    THEN v ... END, NULL for a key it does not list. The sparse sibling
+    of lit_vec — a query's term weights ride in the plan instead of a
+    query relation that must be joined (and broadcast, one job) into
+    it."""
+    cols = [_c(k) for k in keys]
+    out = None
+    for key, v in values.items():
+        cond = reduce(lambda a, b: a & b, [c == F.lit(x) for c, x in zip(cols, key)])
+        out = F.when(cond, F.lit(float(v))) if out is None else out.when(cond, F.lit(float(v)))
+    return out if out is not None else F.lit(None).cast("double")
 
 
 def dot(a: ColumnOrName, b: ColumnOrName) -> Column:

@@ -28,6 +28,7 @@ an all-pairs cross join.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
 
@@ -127,8 +128,13 @@ def hyperplane(plane: int, dim: int) -> list[float]:
     ]
 
 
-def hyperplanes(dim: int, num_planes: int = NUM_PLANES) -> list[list[float]]:
-    return [hyperplane(p, dim) for p in range(num_planes)]
+@functools.lru_cache(maxsize=32)
+def hyperplanes(dim: int, num_planes: int = NUM_PLANES) -> tuple[tuple[float, ...], ...]:
+    """The first `num_planes` hyperplanes at width `dim`, memoized: a
+    pure function of its arguments, but dim·num_planes md5 digests
+    (36,864 at the d=768 serving geometry) per call otherwise.
+    Immutable, so callers can share the cached value."""
+    return tuple(tuple(hyperplane(p, dim)) for p in range(num_planes))
 
 
 def signature_bits(vec_col: str, planes: Sequence[Sequence[float]]) -> Column:
@@ -345,9 +351,9 @@ def ann_lsh_topk(
         for b, qband in query_bands(qsig, bands, rows):
             c = (F.col("band") == b) & (F.col("bval") == F.lit(qband))
             cond = c if cond is None else cond | c
-        cand = _subset_semi_join(
-            banded.filter(cond).select(id_col).distinct(), subset, id_col
-        )
+        # no distinct: a left-semi join is already idempotent in its
+        # right side, so an id found in several bands keeps one row
+        cand = _subset_semi_join(banded.filter(cond).select(id_col), subset, id_col)
         return ranked_cosine_topk(
             emb.join(cand, id_col, "left_semi"),
             query_vec, k, id_col, vec_col, round_to,

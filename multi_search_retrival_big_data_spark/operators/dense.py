@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from multi_search_retrival_big_data_spark.functions.rounding import (
     det_round,
+    quantized_row_sum,
     quantized_sum,
 )
 from multi_search_retrival_big_data_spark.functions.vector import (
@@ -54,24 +55,21 @@ def topk_cosine(
     subset: DataFrame | None = None,
     normalized: bool = False,
     round_to: int | None = None,
-    keep_vec: bool = False,
+    carry: Sequence[str] = (),
 ) -> DataFrame:
     """Q1 — text→image dense top-k (reference text_search,
     utils/faiss_processing.py:118-173). `normalized=True` assumes the
     ingest-time L2-normalization invariant (cosine == dot), matching
     IndexFlatIP over pre-normalized vectors. `round_to` rounds the
     score *before* the sort so oracle comparisons are float-noise-proof.
-    `keep_vec=True` carries the embedding through the top-k (k·dim
-    extra bytes through TakeOrderedAndProject) so a downstream consumer
-    (rocchio_rerank) does not re-join the corpus for k vectors."""
+    `carry` columns ride through the top-k after (id, score) — the
+    embedding for a downstream rocchio_rerank, the grouping label for
+    the facade — so a consumer never re-joins the corpus for k rows."""
     q = lit_vec(query_vec)
     score = dot(vec_col, q) if normalized else cosine_sim(vec_col, q)
     if round_to is not None:
         score = det_round(score, round_to)
-    cols = [F.col(id_col), score.alias("score")]
-    if keep_vec:
-        cols.append(F.col(vec_col))
-    scored = restrict_ids(emb, subset, id_col).select(*cols)
+    scored = restrict_ids(emb, subset, id_col).select(F.col(id_col), score.alias("score"), *carry)
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
@@ -125,49 +123,48 @@ def rocchio_rerank(
     nothing to candidates outside its own top-k; this operator
     accumulates sign·cos over ALL kept candidates — a deliberate
     simplification (every candidate gets its full Rocchio delta) that
-    diverges only when |candidates| > k.
+    diverges only when |candidates| > k. A vote whose id is not in
+    `emb` contributes nothing; with no resolvable vote at all (no
+    votes, or only unknown ids) every kept candidate comes back with
+    delta 0 — Rocchio over an empty feedback set — never an empty
+    page.
 
-    Plan shape: votes ⋈ embeddings (tiny, broadcast) × candidates ⋈
-    embeddings → per-pair dot → groupBy(candidate) sum. The only
-    shuffle is the final aggregation over |candidates| rows. If
-    `candidates` already carries the vector column (topk_cosine
-    keep_vec=True), the candidate-side corpus join disappears — the
-    whole rerank then touches the corpus only for the |votes| rows."""
+    Head/tail split: the head collects the ≤|votes| vote vectors in
+    one id-filtered scan. Each vote then enters the rerank plan as a
+    literal vector, and a candidate's delta is a per-row sum over the
+    votes, each addend quantized exactly like the grouped aggregate
+    it replaces — no vote relation, no cross join, no groupBy. The
+    candidate page is broadcast into the corpus scan for its vectors;
+    if `candidates` already carries the vector column (topk_cosine
+    carry=[vec_col]) that join disappears too."""
     cand_id, prev = candidates.columns[0], candidates.columns[1]
-    vote_id, sign = votes.columns[0], votes.columns[1]
-    neg = votes.filter(F.col(sign) < 0).select(F.col(vote_id).alias(cand_id))
-    has_vec = vec_col in candidates.columns
+    vote_rows = [(r[0], r[1]) for r in votes.select(*votes.columns[:2]).collect()]
+    neg = sorted({i for i, s in vote_rows if s < 0})
+    ids = sorted({i for i, _ in vote_rows})
+    vecs = (
+        dict(emb.filter(F.col(id_col).isin(ids)).select(id_col, vec_col).collect())
+        if ids
+        else {}
+    )
     kept_cols = [F.col(cand_id).alias(id_col), F.col(prev).alias("prev_score")]
-    if has_vec:
-        kept_cols.append(F.col(vec_col))
-    kept = candidates.select(*kept_cols).join(
-        neg.withColumnRenamed(cand_id, id_col), on=id_col, how="left_anti"
-    )
-
-    vote_vecs = F.broadcast(
-        votes.join(emb, votes[vote_id] == emb[id_col], "inner").select(
-            F.col(sign).alias("__sign"), F.col(vec_col).alias("__qvec")
+    if vec_col in candidates.columns:
+        kept = candidates.select(*kept_cols, F.col(vec_col))
+    else:
+        kept = emb.select(id_col, vec_col).join(
+            F.broadcast(candidates.select(*kept_cols)), id_col
         )
-    )
-    cand_vecs = (
-        kept if has_vec else kept.join(emb.select(id_col, vec_col), on=id_col)
-    )
-    pairs = cand_vecs.crossJoin(vote_vecs).select(
-        F.col(id_col),
-        F.col("prev_score"),
-        (F.col("__sign") * cosine_sim(vec_col, "__qvec")).alias("__delta"),
-    )
-    score = F.col("prev_score") + F.col("__d")
-    if round_to is not None:
-        score = det_round(score, round_to)
+    if neg:
+        kept = kept.filter(~F.col(id_col).isin(neg))
     # quantized addends, not a double→DECIMAL cast: the cast rounds
     # through the shortest string repr in Spark but the binary value in
     # DuckDB, drifting by an ulp (see functions/rounding.py)
-    out = (
-        pairs.groupBy(id_col, "prev_score")
-        .agg(quantized_sum(F.col("__delta"), 12).alias("__d"))
-        .select(F.col(id_col), score.alias("score"))
-    )
+    deltas = [
+        F.lit(float(s)) * cosine_sim(vec_col, lit_vec(vecs[i])) for i, s in vote_rows if i in vecs
+    ]
+    score = F.col("prev_score") + (quantized_row_sum(deltas, 12) if deltas else F.lit(0.0))
+    if round_to is not None:
+        score = det_round(score, round_to)
+    out = kept.select(F.col(id_col), score.alias("score"))
     return out.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
@@ -282,6 +279,7 @@ def topk_cosine_arrow(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int | None = None,
+    carry: Sequence[str] = (),
 ) -> DataFrame:
     """Q1 via the ALTERNATIVE physical strategy: Arrow-batched NumPy
     matrix math (`mapInPandas`) instead of the Catalyst
@@ -299,7 +297,8 @@ def topk_cosine_arrow(
     Determinism: scores are quantized INSIDE the UDF with
     floor(x·1e6 + 0.5)/1e6 (exact IEEE ops — `det_round` semantics,
     matching `sql_det_round` in the oracle) before the top-k sort, so
-    BLAS pairwise-summation ulps cannot flip membership or order."""
+    BLAS pairwise-summation ulps cannot flip membership or order.
+    `carry` columns ride through after (id, score), as in topk_cosine."""
     import numpy as np
     import pandas as pd
 
@@ -313,10 +312,11 @@ def topk_cosine_arrow(
             s = (m @ q) / (np.sqrt((m * m).sum(axis=1)) * qn)
             if scale is not None:
                 s = np.floor(s * scale + 0.5) / scale
-            yield pd.DataFrame({id_col: pdf[id_col], "score": s})
+            yield pd.DataFrame({id_col: pdf[id_col], "score": s, **{c: pdf[c] for c in carry}})
 
-    scored = emb.select(id_col, vec_col).mapInPandas(
-        score_batches, f"{id_col} long, score double"
+    carried = "".join(f", {c} {emb.schema[c].dataType.simpleString()}" for c in carry)
+    scored = emb.select(id_col, vec_col, *carry).mapInPandas(
+        score_batches, f"{id_col} long, score double{carried}"
     )
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 

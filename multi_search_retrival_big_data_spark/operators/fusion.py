@@ -15,10 +15,14 @@ single shuffle proportional to the candidate count, not the corpus.
 
 from __future__ import annotations
 
+import math
+from collections import defaultdict
 from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from multi_search_retrival_big_data_spark import tables
 
 MINMAX_EPS = 1e-6  # the reference's denominator epsilon (combine_utils.py:41)
 
@@ -77,6 +81,28 @@ def merge_by_addition(
 RRF_K0 = 60  # the constant of Cormack, Clarke & Buettcher (SIGIR 2009)
 
 
+def rrf_rows(
+    sources: list[DataFrame],
+    k0: int = RRF_K0,
+    k: int | None = None,
+) -> list[tuple[int, float]]:
+    """The fused (id, score) ranking of reciprocal_rank_fusion as
+    driver rows, for callers that keep composing on the driver."""
+    tagged = [_as_id_score(s).withColumn("__src", F.lit(i)) for i, s in enumerate(sources)]
+    lists: dict[int, list[tuple[float, int]]] = defaultdict(list)
+    for r in reduce(lambda a, b: a.unionByName(b), tagged).collect():
+        lists[r["__src"]].append((-r["score"], r["id"]))
+    totals: dict[int, int] = defaultdict(int)
+    for ranked in lists.values():
+        for rank, (_, i) in enumerate(sorted(ranked), start=1):
+            # one double division per addend (1e12/(k0+r)) — NOT
+            # (1/(k0+r))·1e12, which can differ by an ulp; the oracle
+            # emits the same single division
+            totals[i] += math.floor(1e12 / (float(k0) + float(rank)) + 0.5)
+    out = sorted(((i, float(t) / 1e12) for i, t in totals.items()), key=lambda t: (-t[1], t[0]))
+    return out[:k] if k is not None else out
+
+
 def reciprocal_rank_fusion(
     sources: list[DataFrame],
     k0: int = RRF_K0,
@@ -92,35 +118,17 @@ def reciprocal_rank_fusion(
     hybrid retrieval default). Same call shape as merge_by_addition so
     every multi-channel query can swap fusers.
 
-    Determinism: rank = row_number ordered by (score DESC, id ASC) —
-    both engines rank det-rounded scores, so ranks are identical; each
-    addend 1e12/(k0+rank) is FLOOR-quantized before an exact
-    DECIMAL(38,0) sum (the common.dsum rationale), making the
-    accumulation order-independent and bit-equal cross-engine.
+    Determinism: rank = position by (score DESC, id ASC) — both
+    engines rank det-rounded scores, so ranks are identical; each
+    addend 1e12/(k0+rank) is FLOOR-quantized into an exact integer
+    total (the common.dsum rationale), making the accumulation
+    order-independent and bit-equal cross-engine.
 
-    Scale shape: every source is a request-sized top-k list, so the
-    rank window is a single-partition sort over ≤k rows — never a
-    corpus window; the fuse itself is union → groupBy(id) over ≤ Σk
-    rows. Nothing here touches the corpus."""
-    from pyspark.sql.window import Window
-
-    ranked = []
-    for s in sources:
-        d = _as_id_score(s)
-        w = Window.orderBy(F.desc("score"), F.asc("id"))
-        ranked.append(d.select("id", F.row_number().over(w).alias("r")))
-    unioned = reduce(lambda a, b: a.unionByName(b), ranked)
-    # one double division per addend (1e12/(k0+r)) — NOT (1/(k0+r))·1e12,
-    # which can differ by an ulp; the oracle emits the same single division
-    addend = F.floor(
-        F.lit(1e12) / (F.lit(float(k0)) + F.col("r").cast("double")) + F.lit(0.5)
-    ).cast("decimal(38,0)")
-    out = (
-        unioned.groupBy("id")
-        .agg((F.sum(addend).cast("double") / F.lit(1e12)).alias("score"))
-        .orderBy(F.desc("score"), F.asc("id"))
-    )
-    return out.limit(k) if k is not None else out
+    Head/tail split: every source is a request-sized top-k list, so
+    the sources are collected in ONE action (their union) and ranked
+    and fused on the driver; the fused page comes back as a local
+    relation. Nothing here touches the corpus."""
+    return tables.local(sources[0].sparkSession, rrf_rows(sources, k0, k), "id BIGINT, score DOUBLE")
 
 
 def merge_l2_dedup_max(

@@ -29,11 +29,13 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from multi_search_retrival_big_data_spark import tables
 from multi_search_retrival_big_data_spark.encoders import CrossEncoder, FakeCrossEncoder
-from multi_search_retrival_big_data_spark.functions.rounding import det_round
+from multi_search_retrival_big_data_spark.functions.rounding import det_round, det_round_np
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -58,7 +60,7 @@ MMR_LAMBDA = 0.7
 # construction), but nothing upstream ENFORCES that — this cap does,
 # the same misuse-proofing as connected_components_auto's
 # driver_max_edges gate. Cost discipline: in mmr_rerank the fence is
-# FOLDED INTO the relevance collect (a limit(cap+1) on the frame the
+# FOLDED INTO the candidate collect (a limit(cap+1) on the frame the
 # collect reads — zero extra jobs; re-running the first-stage pipeline
 # for a standalone probe measured +1.4 s on the diverse-search
 # facade). cross_encoder_rerank has no driver materialization to fold
@@ -75,6 +77,26 @@ def _fence_error(max_candidates: int, op: str) -> ValueError:
         "first-stage top-n the candidates before reranking, or raise "
         "the fence explicitly)"
     )
+
+
+def pairwise_cosine(vecs: np.ndarray, round_to: int = 6) -> np.ndarray:
+    """det_round(cosine_sim(a, b)) for every pair of rows of `vecs`,
+    BIT-IDENTICAL to the Catalyst expression over the same doubles:
+    each dot product is the last prefix of np.cumsum, a sequential left
+    fold like F.aggregate's (the ann.signature_bits_arrow argument);
+    norms are sqrt of the self-dot; the quotient is rounded by
+    det_round_np. A zero squared-norm product pins the similarity to
+    0.0 — the zero-norm guard mmr_rerank's oracle mirrors as a CASE."""
+    n = len(vecs)
+    dots = np.empty((n, n))
+    for i in range(n):
+        dots[i] = np.cumsum(vecs[i] * vecs, axis=1)[:, -1]
+    sq = np.diag(dots).copy()
+    norms = np.sqrt(sq)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sims = det_round_np(dots / (norms[:, None] * norms[None, :]), round_to)
+    sims[(sq[:, None] * sq[None, :]) == 0.0] = 0.0
+    return sims
 
 
 def mmr_rerank(
@@ -94,68 +116,30 @@ def mmr_rerank(
     near-identical keyframes (the reference's dominant redundancy; its
     UI groups by video, MMR diversifies WITHIN the ranking).
 
-    Execution shape: relevance and the n·(n−1) pairwise similarities
-    are computed IN-PLAN (det-rounded Catalyst expressions over the
-    request-sized candidate list) and collected — n ≤ a few hundred by
-    construction, independent of corpus size; the greedy argmax chain
-    is inherently sequential (each step depends on the previous
-    selection), so it runs driver-side on the already-rounded values —
-    the same placement as the reference's NumPy rerank tail
-    (utils/faiss_processing.py re-query path). Every arithmetic step
-    (λ·rel − (1−λ)·max sim, IEEE doubles over det-rounded inputs) is
-    replicated verbatim by the recursive-CTE oracle, so the selection
-    is engine-exact. Returns (sel_rank, id, rel)."""
-    from multi_search_retrival_big_data_spark.functions.rounding import det_round
-    from multi_search_retrival_big_data_spark.functions.vector import cosine_sim
-
-    spark = candidates.sparkSession
-    # ONE evaluation of the candidate pipeline (r11, guide §5/§2.4):
-    # without the materialization, the first-stage pipeline feeding
-    # `candidates` runs THREE times — once under the relevance collect
-    # and once per side of the n² similarity self-join (measured on
-    # endpoint_diverse_search: the sparse+dense+RRF+hydration lineage
-    # re-evaluated per action dominated the 3.5-4.3 s anchor; after:
-    # one evaluation + two reads of a ≤cap-row checkpoint). Eager
-    # localCheckpoint is within-query lineage control: the candidate
-    # list is request-sized BY CONTRACT (the fence below enforces the
-    # cap with bounded driver ingest; executor-side materialization of
-    # a miscalled corpus-sized input is bounded by the same storage
-    # that any shuffle of it would use).
-    sel = candidates.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), F.col(rel_col).alias("rel")
-    ).localCheckpoint()
-    a = sel.select(F.col("id").alias("id_a"), F.col("v").alias("__va"))
-    b = sel.select(F.col("id").alias("id_b"), F.col("v").alias("__vb"))
-    # zero-norm guard: a degenerate candidate's cosine is undefined
-    # (NULL/NaN depending on engine arithmetic) — an EXPLICIT branch on
-    # the squared-norm product pins sim = 0.0 identically in this plan
-    # and in the oracle's mirrored CASE (r7 advice: a coalesce here
-    # with a NULL-skipping SQL max() would diverge the moment a
-    # zero-norm vector reached an oracle-compared query)
-    from multi_search_retrival_big_data_spark.functions.vector import dot
-
-    zero_norm = (dot("__va", "__va") * dot("__vb", "__vb")) == F.lit(0.0)
-    sims_df = (
-        a.join(b, F.col("id_a") != F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.when(zero_norm, F.lit(0.0))
-            .otherwise(det_round(cosine_sim("__va", "__vb"), round_to))
-            .alias("sim"),
-        )
+    Head/tail split: the head is ONE collect of (id, vector, rel) over
+    the request-sized candidate list, with the fence folded into it
+    (limit(cap+1), raising before any tail work). The tail runs on the
+    driver, the same placement as the reference's NumPy rerank tail
+    (utils/faiss_processing.py re-query path): the n·(n−1) pairwise
+    similarities (pairwise_cosine, bit-identical to the in-plan
+    det-rounded cosine with its zero-norm guard) and the inherently
+    sequential greedy argmax chain. Every arithmetic step (λ·rel −
+    (1−λ)·max sim, IEEE doubles over det-rounded inputs) is replicated
+    verbatim by the recursive-CTE oracle, so the selection is
+    engine-exact. The page comes back as a local relation of
+    (sel_rank, id, rel)."""
+    rows = (
+        candidates.select(F.col(id_col), F.col(vec_col), F.col(rel_col))
+        .limit(max_candidates + 1)
+        .collect()
     )
-    # the FENCE rides the relevance collect: a limit(cap+1) on the
-    # two-column projection bounds the driver ingest (no standalone
-    # probe job — re-running the first-stage pipeline for one measured
-    # +1.4 s on the diverse-search facade), raising BEFORE the n²
-    # similarity collect runs; once it passes, n ≤ cap proves the
-    # unlimited sims frame is ≤ cap² rows
-    rel_rows = sel.select("id", "rel").limit(max_candidates + 1).collect()
-    if len(rel_rows) > max_candidates:
+    if len(rows) > max_candidates:
         raise _fence_error(max_candidates, "mmr_rerank")
-    rel = {r["id"]: r["rel"] for r in rel_rows}
-    sim = {(r["id_a"], r["id_b"]): r["sim"] for r in sims_df.collect()}
+    ids = [r[0] for r in rows]
+    rel = {r[0]: r[2] for r in rows}
+    vecs = np.asarray([r[1] for r in rows], dtype=np.float64)
+    sims = pairwise_cosine(vecs, round_to).tolist() if rows else []
+    sim = {(a, b): sims[i][j] for i, a in enumerate(ids) for j, b in enumerate(ids) if i != j}
     remaining = set(rel)
     selected: list[int] = []
     while remaining and len(selected) < k:
@@ -171,9 +155,9 @@ def mmr_rerank(
                 best = (key, c)
         selected.append(best[1])
         remaining.discard(best[1])
-    rows = [(i + 1, cid, rel[cid]) for i, cid in enumerate(selected)]
-    return spark.createDataFrame(
-        rows, f"sel_rank BIGINT, {id_col} BIGINT, rel DOUBLE"
+    page = [(i + 1, cid, rel[cid]) for i, cid in enumerate(selected)]
+    return tables.local(
+        candidates.sparkSession, page, f"sel_rank BIGINT, {id_col} BIGINT, rel DOUBLE"
     )
 
 

@@ -9,11 +9,12 @@ equivalent is a **posting-list inverted index** — a DataFrame
 `(term, doc_id, weight)` — because:
 
 - it IS the sparse representation: the q·Mᵀ CSR dot product becomes
-  `query_terms ⋈ postings ON term → groupBy(doc_id).sum(qw·w)`,
+  `postings WHERE term IN query → groupBy(doc_id).sum(qw·w)`,
   touching exactly the nnz entries of matched terms (never densified);
 - at 100 TB it shards naturally: bucket postings by `term` and the
-  scoring join co-locates without a shuffle of the index; the query
-  side is a handful of rows, always broadcast;
+  query's term list prunes the buckets without a shuffle of the
+  index; the query side is a handful of weights, compiled on the
+  driver and carried in the plan as literals;
 - the aggregation is partial (map-side combine), so per-executor
   traffic is ~|matched docs|, not |postings|.
 
@@ -29,17 +30,27 @@ score is the exact TF-IDF cosine sklearn produces.
 
 from __future__ import annotations
 
+import math
 import re
-from collections import Counter
+from collections import Counter, defaultdict
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from multi_search_retrival_big_data_spark import tables
+from multi_search_retrival_big_data_spark.functions.rounding import (
+    det_round,
+    det_round_np,
+    quantized_sum,
+    quantized_sum_py,
+)
 from multi_search_retrival_big_data_spark.functions.text import (
     char_ngrams,
     tokenize,
     word_ngrams_range,
 )
+from multi_search_retrival_big_data_spark.functions.vector import lit_lookup
+from multi_search_retrival_big_data_spark.operators.fusion import MINMAX_EPS
 from multi_search_retrival_big_data_spark.partitioning import ensure_min_partitions
 
 TOKEN_RE = re.compile(r"\w+")
@@ -169,58 +180,74 @@ def query_terms(
     return sorted(Counter(grams).items())
 
 
-def query_vector(postings: DataFrame, qterms: list[tuple[str, int]]) -> DataFrame:
-    """(term, qw) — the L2-normalized TF-IDF query vector in the
-    corpus vector space. OOV query terms drop out (the fitted model
-    defines the space)."""
-    spark = postings.sparkSession
-    q = spark.createDataFrame([(t, float(c)) for t, c in qterms], "term STRING, qtf DOUBLE")
-    # idf is only needed for the query's own terms — an isin filter
-    # (pushed into the scan) before the distinct keeps this a
-    # few-row lookup instead of a full-vocabulary de-duplication
-    idf = (
-        postings.filter(F.col("term").isin([t for t, _ in qterms]))
-        .select("term", "idf")
+def _idf_lookup(postings: DataFrame, terms: list[str], keys: list[str]) -> dict[tuple, float]:
+    """(*keys, term) → idf for the query's own terms: ONE job, a
+    term-filtered scan whose distinct needs no exchange on the
+    persisted, term-bucketed index (the filter prunes buckets too),
+    collecting ≤ |terms| rows per key."""
+    if not terms:
+        return {}
+    rows = (
+        postings.filter(F.col("term").isin(terms))
+        .select(*keys, "term", "idf")
         .distinct()
+        .collect()
     )
-    qv = q.join(idf, "term")
-    qnorm = qv.agg(F.sqrt(F.sum((F.col("qtf") * F.col("idf")) ** 2)).alias("__qnorm"))
-    return qv.crossJoin(F.broadcast(qnorm)).select(
-        "term", ((F.col("qtf") * F.col("idf")) / F.col("__qnorm")).alias("qw")
-    )
+    return {tuple(r)[:-1]: r["idf"] for r in rows}
+
+
+def _l2_normalize(w: dict) -> dict:
+    """w / ‖w‖₂ on the driver; the norm folds the squares left to right
+    in key order (the in-plan aggregate it replaces summed them in
+    whatever order rows arrived — the 1e-12 quantization downstream
+    absorbs an ulp either way)."""
+    acc = 0.0
+    for key in sorted(w):
+        acc = acc + w[key] * w[key]
+    qnorm = math.sqrt(acc)
+    return {key: v / qnorm for key, v in w.items()}
+
+
+def query_vector(postings: DataFrame, qterms: list[tuple[str, int]]) -> dict[str, float]:
+    """term → qw, the L2-normalized TF-IDF query vector in the corpus
+    vector space. OOV query terms drop out (the fitted model defines
+    the space).
+
+    Plan shape: the head is one idf lookup (_idf_lookup, ≤ |qterms|
+    rows); the weights are computed on the driver and enter the
+    scoring plan as literals (score_vector) — no query relation, no
+    norm aggregate, no 1-row broadcast."""
+    idf = _idf_lookup(postings, sorted({t for t, _ in qterms}), [])
+    return _l2_normalize({t: float(c) * idf[(t,)] for t, c in qterms if (t,) in idf})
 
 
 def score_vector(
     postings: DataFrame,
-    qv: DataFrame,
+    qv: dict[str, float],
     k: int,
     subset: DataFrame | None = None,
     round_to: int | None = None,
+    weight_col: str = "weight",
 ) -> DataFrame:
-    """Score docs against ANY (term, qw) query-vector DataFrame —
-    literal-compiled (query_vector) or plan-derived (PRF expansion).
-    The vector side is broadcast (request-sized); the postings side
-    pays one term-bucketed join + one doc_id groupBy."""
-    base = postings
+    """(doc_id, score) top-k of Σ_t qv[t]·weight_col against ANY
+    term → weight query vector — idf-compiled (query_vector),
+    feedback-expanded (tfidf_prf_search) or BM25 term counts
+    (bm25_score, weight_col="score_w"). The weights are plan literals;
+    the term IN-list prunes the scan (and the buckets), and the only
+    exchange is the doc_id aggregation over the matched postings."""
+    if not qv:
+        return tables.local(postings.sparkSession, [], "doc_id BIGINT, score DOUBLE")
+    base = postings.filter(F.col("term").isin(sorted(qv)))
     if subset is not None:
         base = base.join(
             subset.select(F.col(subset.columns[0]).alias("doc_id")), "doc_id", "left_semi"
         )
     # exact order-independent accumulation (see queries/common.dsum)
-    addend = F.col("qw") * F.col("weight")
-    score = (
-        F.sum(F.floor(addend * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,0)")).cast("double")
-        / F.lit(1e12)
-    )
+    addend = lit_lookup(["term"], {(t,): w for t, w in qv.items()}) * F.col(weight_col)
+    score = quantized_sum(addend, 12)
     if round_to is not None:
-        score = F.floor(score * F.lit(float(10 ** round_to)) + F.lit(0.5)).cast("double") / F.lit(
-            float(10 ** round_to)
-        )
-    scored = (
-        base.join(F.broadcast(qv), "term")
-        .groupBy("doc_id")
-        .agg(score.alias("score"))
-    )
+        score = det_round(score, round_to)
+    scored = base.groupBy("doc_id").agg(score.alias("score"))
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
@@ -232,7 +259,7 @@ def tfidf_score(
     round_to: int | None = None,
 ) -> DataFrame:
     """Q4/Q5 — score docs against a compiled query: the CSR q·Mᵀ dot
-    re-expressed as an inverted-index join. Returns (doc_id, score)
+    re-expressed as an inverted-index scan. Returns (doc_id, score)
     top-k, `score` = TF-IDF cosine.
 
     The subset path (`M[index,:]` row-slice in the reference,
@@ -267,11 +294,12 @@ def tfidf_prf_search(
 
     Scale shape: the feedback-doc semi-join broadcasts n_fb ids into
     the term-bucketed postings scan; term election aggregates only the
-    feedback docs' postings (≤ n_fb rows per term); the re-score is the
-    same single broadcast-vector pass as every other sparse query. Two
-    passes over the index, zero corpus shuffles beyond the scorer's
-    own doc_id groupBy."""
-    fb = tfidf_score(postings, qterms, n_fb, round_to=round_to)
+    feedback docs' postings (≤ n_fb rows per term) and collects the
+    m_terms winners; the re-score is the same literal-vector pass as
+    every other sparse query. Two passes over the index, zero corpus
+    shuffles beyond the scorer's own doc_id groupBy."""
+    qv = query_vector(postings, qterms)
+    fb = score_vector(postings, qv, n_fb, round_to=round_to)
     orig_terms = [t for t, _ in qterms]
     mass = (
         F.sum(
@@ -286,9 +314,9 @@ def tfidf_prf_search(
         .agg(mass.alias("__mass"))
         .orderBy(F.desc("__mass"), F.asc("term"))
         .limit(m_terms)
-        .select("term", (F.lit(float(beta)) * F.col("__mass")).alias("qw"))
+        .collect()
     )
-    combined = query_vector(postings, qterms).unionByName(expansion)
+    combined = {**qv, **{r["term"]: float(beta) * r["__mass"] for r in expansion}}
     return score_vector(postings, combined, k, round_to=round_to)
 
 
@@ -410,24 +438,8 @@ def bm25_score(
 ) -> DataFrame:
     """Score = Σ_t qtf(t) · score_w(t, doc) over matched terms.
     (BM25Okapi.get_scores counts each query occurrence — bm25.py:99.)"""
-    spark = bm25_postings.sparkSession
-    q = spark.createDataFrame([(t, float(c)) for t, c in qterms], "term STRING, qtf DOUBLE")
-    base = bm25_postings
-    if subset is not None:
-        base = base.join(
-            subset.select(F.col(subset.columns[0]).alias("doc_id")), "doc_id", "left_semi"
-        )
-    addend = F.col("qtf") * F.col("score_w")
-    score = (
-        F.sum(F.floor(addend * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,0)")).cast("double")
-        / F.lit(1e12)
-    )
-    if round_to is not None:
-        score = F.floor(score * F.lit(float(10 ** round_to)) + F.lit(0.5)).cast("double") / F.lit(
-            float(10 ** round_to)
-        )
-    scored = base.join(F.broadcast(q), "term").groupBy("doc_id").agg(score.alias("score"))
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    qtf = {t: float(c) for t, c in qterms}
+    return score_vector(bm25_postings, qtf, k, subset, round_to, weight_col="score_w")
 
 
 def fit_tfidf_multichannel(
@@ -497,74 +509,59 @@ def multichannel_tfidf_score(
     k: int,
     round_to: int | None = None,
 ) -> DataFrame:
-    """Q6/Q7 — multi-channel context search as ONE linear plan:
-    per-channel TF-IDF cosine → per-channel top-k → min-max normalize
-    → additive fusion (Q8) → global top-k. Returns (doc_id, score).
+    """Q6/Q7 — multi-channel context search: per-channel TF-IDF cosine
+    → per-channel top-k → min-max normalize → additive fusion (Q8) →
+    global top-k. Returns (doc_id, score).
 
-    Replaces C independent score+fuse branches (each recomputing its
-    fit) with shared shuffles keyed by channel. Per-channel top-k is a
-    row_number window partitioned by channel — the windowed relation
-    holds only query-matched candidates, not the corpus."""
+    Head/tail split: the head is ONE distributed plan over the index —
+    per-channel weights as literals (query_vector's driver compile,
+    one idf lookup for every channel's terms), shared shuffles keyed
+    by channel, and a row_number window partitioned by channel that
+    Spark prunes as a WindowGroupLimit — cut at ≤ C·k_per_channel
+    rows and collected. The tail (min-max over each channel's list,
+    quantized additive fusion, the global top-k) replays the Q8
+    arithmetic on the driver in the same IEEE order and exact integer
+    totals, and the page comes back as a local relation."""
     from pyspark.sql.window import Window
 
-    spark = postings.sparkSession
-    q = spark.createDataFrame(
-        [
-            (ch, t, float(c))
-            for ch, terms in channel_qterms.items()
-            for t, c in terms
-        ],
-        "channel STRING, term STRING, qtf DOUBLE",
-    )
     all_terms = sorted({t for terms in channel_qterms.values() for t, _ in terms})
-    idf = (
-        postings.filter(F.col("term").isin(all_terms))
-        .select("channel", "term", "idf")
-        .distinct()
-    )
-    qv = q.join(idf, ["channel", "term"])
-    qnorm = qv.groupBy("channel").agg(
-        F.sqrt(F.sum((F.col("qtf") * F.col("idf")) ** 2)).alias("__qnorm")
-    )
-    qv = qv.join(qnorm, "channel").select(
-        "channel", "term", ((F.col("qtf") * F.col("idf")) / F.col("__qnorm")).alias("qw")
-    )
-    addend = F.col("qw") * F.col("weight")
-    score = (
-        F.sum(F.floor(addend * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,0)")).cast("double")
-        / F.lit(1e12)
-    )
-    if round_to is not None:
-        m6 = F.lit(float(10 ** round_to))
-        score = F.floor(score * m6 + F.lit(0.5)).cast("double") / m6
-    scored = (
-        postings.join(F.broadcast(qv), ["channel", "term"])
-        .groupBy("channel", "doc_id")
-        .agg(score.alias("score"))
-    )
-    wk = Window.partitionBy("channel").orderBy(F.desc("score"), F.asc("doc_id"))
-    topk = scored.withColumn("__rn", F.row_number().over(wk)).filter(
-        F.col("__rn") <= k_per_channel
-    )
-    wmm = Window.partitionBy("channel")
-    normed = topk.select(
-        "doc_id",
-        (
-            (F.col("score") - F.min("score").over(wmm))
-            / (F.max("score").over(wmm) - F.min("score").over(wmm) + F.lit(1e-6))
-        ).alias("score"),
-    )
-    fused = (
-        F.sum(F.floor(F.col("score") * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,0)")).cast(
-            "double"
+    idf = _idf_lookup(postings, all_terms, ["channel"])
+    qw: dict[tuple[str, str], float] = {}
+    for ch, terms in channel_qterms.items():
+        w = {t: float(c) * idf[(ch, t)] for t, c in terms if (ch, t) in idf}
+        qw.update({(ch, t): v for t, v in _l2_normalize(w).items()})
+    top: list = []
+    if qw:
+        addend = lit_lookup(["channel", "term"], qw) * F.col("weight")
+        score = quantized_sum(addend, 12)
+        if round_to is not None:
+            score = det_round(score, round_to)
+        scored = (
+            postings.filter(F.col("term").isin(all_terms))
+            .filter(addend.isNotNull())
+            .groupBy("channel", "doc_id")
+            .agg(score.alias("score"))
         )
-        / F.lit(1e12)
-    )
+        wk = Window.partitionBy("channel").orderBy(F.desc("score"), F.asc("doc_id"))
+        top = (
+            scored.withColumn("__rn", F.row_number().over(wk))
+            .filter(F.col("__rn") <= k_per_channel)
+            .select("channel", "doc_id", "score")
+            .collect()
+        )
+    lists: dict[str, list[tuple[int, float]]] = defaultdict(list)
+    for r in top:
+        lists[r["channel"]].append((r["doc_id"], r["score"]))
+    normed: dict[int, list[float]] = defaultdict(list)
+    for rows in lists.values():
+        mn, mx = min(s for _, s in rows), max(s for _, s in rows)
+        for d, s in rows:
+            normed[d].append((s - mn) / (mx - mn + MINMAX_EPS))
+    fused = {d: quantized_sum_py(v, 12) for d, v in normed.items()}
     if round_to is not None:
-        m6 = F.lit(float(10 ** round_to))
-        fused = F.floor(fused * m6 + F.lit(0.5)).cast("double") / m6
-    out = normed.groupBy("doc_id").agg(fused.alias("score"))
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        fused = {d: float(det_round_np(v, round_to)) for d, v in fused.items()}
+    page = sorted(fused.items(), key=lambda t: (-t[1], t[0]))[:k]
+    return tables.local(postings.sparkSession, page, "doc_id BIGINT, score DOUBLE")
 
 
 def write_postings_bucketed(

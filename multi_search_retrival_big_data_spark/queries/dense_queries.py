@@ -119,9 +119,9 @@ def dense_knn_by_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dense_rocchio_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tables.load(spark, "embeddings", sf_dir)
-    # keep_vec: the rerank consumes the candidate vectors directly, so
+    # carry: the rerank consumes the candidate vectors directly, so
     # the plan scans the corpus twice (top-k + vote fetch), not thrice
-    candidates = dense.topk_cosine(emb, QUERY_VEC, k=20, round_to=6, keep_vec=True)
+    candidates = dense.topk_cosine(emb, QUERY_VEC, k=20, round_to=6, carry=["embedding"])
     votes = spark.createDataFrame(ROCCHIO_VOTES, "vec_id BIGINT, sign DOUBLE")
     return dense.rocchio_rerank(emb, candidates, votes, k=10, round_to=6)
 

@@ -89,7 +89,7 @@ def search_space_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     allowed = filters.build_search_space(
         docs, "doc_id", ["source"], ignore_ids=ignore, keep_ids=keep, space=space
     )
-    return allowed.orderBy("doc_id")
+    return allowed.select("doc_id").orderBy("doc_id")
 
 
 _QTXT = sparse.query_terms("slow scan table filter")

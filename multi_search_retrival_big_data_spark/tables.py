@@ -13,6 +13,7 @@ pruning into the scan.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -38,6 +39,25 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
     if name == "events":
         return _load_events(spark, sf_dir)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def local(spark: SparkSession, rows: Sequence[tuple], schema: str) -> DataFrame:
+    """A request-sized table built on the driver (a result page, a
+    vote list) as an Arrow-backed LocalRelation: creating, reading and
+    collecting it runs no Spark job, where createDataFrame(list) builds
+    an RDD that every read (and every broadcast of it) re-runs as a
+    job. Empty `rows` give an empty relation of the same schema."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _parse_datatype_string
+
+    st = _parse_datatype_string(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(st.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=to_arrow_type(f.dataType)) for c, f in zip(cols, st.fields)],
+        names=st.names,
+    )
+    return spark.createDataFrame(table, st)
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,6 +15,9 @@ def test_hyperplanes_deterministic_and_pm1():
     p2 = ann.hyperplanes(8, 4)
     assert p1 == p2
     assert all(v in (1.0, -1.0) for plane in p1 for v in plane)
+    # memoized and immutable: every caller shares one cached value
+    assert p1 is p2 and isinstance(p1, tuple) and all(isinstance(p, tuple) for p in p1)
+    assert list(p1[2]) == ann.hyperplane(2, 8)
 
 
 @pytest.mark.slow

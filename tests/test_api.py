@@ -107,3 +107,59 @@ def test_diverse_search_page(spark, sf_dir):
     ).collect()
     rels = [r.rel for r in pure]
     assert rels == sorted(rels, reverse=True)
+
+
+def _jobs_per_call(spark, fn) -> int:
+    """Spark jobs one facade request runs, construct phase included:
+    the request's calls and its collect share one job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"api-ceiling-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "facade job ceiling", False)
+    try:
+        fn().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_request_job_ceilings(engine, spark):
+    """Each request is one distributed head cut at a top-k plus a
+    driver tail over request-sized rows: the id filters, votes and
+    candidate page arrive as request-sized frames (built from lists,
+    as a server would), and every method stays under its ceiling."""
+    ids = lambda xs: spark.createDataFrame([(i,) for i in xs], "vec_id BIGINT")  # noqa: E731
+    text = "fast spark join"
+    ceilings = {
+        "text_search keep_ids": (2, lambda: engine.text_search(text, k=50, keep_ids=ids(range(100, 400)))),
+        "text_search ignore_ids": (2, lambda: engine.text_search(text, k=50, ignore_ids=ids(range(0, 60, 3)))),
+        "panel_search": (4, lambda: engine.panel_search({"tags": ["scan", "window"]}, k=50)),
+        "diverse_search": (5, lambda: engine.diverse_search(text, k=8)),
+    }
+    page = [(r.vec_id, r.score) for r in engine.text_search(text, k=50, group=False).collect()]
+    prev = spark.createDataFrame(page, "vec_id BIGINT, score DOUBLE")
+    ceilings["feedback"] = (3, lambda: engine.feedback(prev, [page[3][0], page[5][0]], [page[1][0]], k=50))
+    over = {
+        name: n
+        for name, (ceiling, fn) in ceilings.items()
+        if (n := _jobs_per_call(spark, fn)) > ceiling
+    }
+    assert not over, f"jobs per request over the ceiling: {over}"
+
+
+def test_feedback_without_resolvable_votes_keeps_page(engine, spark):
+    """No votes, or votes only on ids the corpus lacks: every candidate
+    gets delta 0 (Rocchio over an empty feedback set), so the whole
+    page comes back in its own order — never an empty page."""
+    page = [(r.vec_id, r.score) for r in engine.text_search("anything", k=20, group=False).collect()]
+    prev = spark.createDataFrame(page, "vec_id BIGINT, score DOUBLE")
+    want = sorted(page, key=lambda t: (-t[1], t[0]))
+    for pos, neg in (([], []), ([10**9], []), ([10**9], [10**9 + 1])):
+        got = engine.feedback(prev, pos, neg, k=50).collect()
+        assert [(r.vec_id, r.score) for r in got] == want, (pos, neg)
+    # a known negative vote removes its id, and only that id
+    got = engine.feedback(prev, [], [page[0][0]], k=50).collect()
+    assert sorted(r.vec_id for r in got) == sorted(i for i, _ in page if i != page[0][0])

@@ -5,7 +5,9 @@ from __future__ import annotations
 import hashlib
 import math
 
+import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from multi_search_retrival_big_data_spark.encoders import (
     FakeCrossEncoder,
@@ -116,6 +118,37 @@ def test_mmr_zero_norm_candidate_degrades_gracefully(spark):
     assert got[0].vec_id == 1
     # degenerate candidate has sim 0 to everything -> pure-relevance slot
     assert [r.vec_id for r in got] == [1, 2, 3]
+
+    # the driver similarities are bit-identical to the in-plan
+    # det_round(cosine_sim(...)) with its zero-norm guard, on random
+    # vectors (double and float32-valued, a duplicate, a negation) as
+    # well as the zero-norm ones
+    from multi_search_retrival_big_data_spark.functions.rounding import det_round
+    from multi_search_retrival_big_data_spark.functions.vector import cosine_sim, dot
+
+    rng = np.random.default_rng(7)
+    vecs = rng.normal(size=(14, 24))
+    vecs[3:7] = vecs[3:7].astype(np.float32)
+    vecs[8], vecs[9], vecs[10] = 0.0, vecs[2], -vecs[4]
+    vecs[11] = np.where(rng.random(24) < 0.8, 0.0, rng.normal(size=24))
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)], "id BIGINT, v ARRAY<DOUBLE>"
+    )
+    a = df.select(F.col("id").alias("a"), F.col("v").alias("va"))
+    b = df.select(F.col("id").alias("b"), F.col("v").alias("vb"))
+    zero_norm = (dot("va", "va") * dot("vb", "vb")) == F.lit(0.0)
+    in_plan = {
+        (r.a, r.b): r.sim
+        for r in a.crossJoin(b)
+        .select(
+            "a",
+            "b",
+            F.when(zero_norm, F.lit(0.0)).otherwise(det_round(cosine_sim("va", "vb"), 6)).alias("sim"),
+        )
+        .collect()
+    }
+    driver = rerank.pairwise_cosine(vecs, 6)
+    assert {(i, j): driver[i, j] for i in range(14) for j in range(14)} == in_plan
 
 
 def test_rerank_candidate_fences(spark):

@@ -25,25 +25,13 @@ SCALAR_BROADCAST_OK = {
     "fusion_dual_model_true_d768",  # same min-max 1-row broadcasts, at width
     "fusion_l2_dedup_max",
     "fusion_hybrid_sparse_dense",
-    "fusion_rrf_hybrid",  # sparse scorer's 1-row qnorm broadcast (rank fuse itself is shuffle-only)
-    "rerank_cross_encoder",  # sparse first stage's 1-row qnorm broadcast; rerank side is request-sized
     "trimodal_context_search",
-    "sparse_tfidf_topk",
-    "sparse_tfidf_topk_subset",
-    "sparse_tfidf_ngram13_topk",
     "sparse_bm25_topk",
     "speech_asr_bm25_search",  # in-plan BM25 fit: 1-row n/avgdl/avgidf scalar broadcasts
     "ocr_tfidf_search",        # in-plan TF-IDF fit: 1-row n/qnorm scalar broadcasts
-    "sparse_tfidf_char_fallback",
-    "sparse_multichannel_context",
-    "sparse_prf_expansion_topk",  # two qnorm 1-row broadcasts (initial + re-score pass)
     "dense_knn_by_id",       # 1-row reconstructed query vector
     "endpoint_image_search",  # same knn_by_id 1-row anchor, behind the facade
     "monitor_text_oov_rate",  # fit_tfidf's 1-row corpus-size broadcast in the model branch
-    "dense_rocchio_rerank",  # tiny vote set cross candidates
-    "endpoint_feedback_rerank",  # same rocchio vote-set cross, behind the facade
-    "group_hits_by_source",  # sparse scorer's 1-row qnorm broadcast
-    "group_quota_topk",      # same sparse first stage's 1-row qnorm broadcast
     "emb_near_dup_exact",    # all-pairs audit path: cross join BY DESIGN
     # (ann_ivf_topk_cosine / ann_recall_at_k no longer need an entry:
     # the quantizer assignment is precomputed — index_store.ivf_assignments)
@@ -80,7 +68,6 @@ LINEITEM_FULL_SCAN_OK: set[str] = set()
 # attach a dim that fits in memory)
 HYDRATION_BROADCAST_EXPECTED = {
     "hydrate_dense_hits",
-    "endpoint_textsearch_grouped",
 }
 
 # queries whose scan MUST carry a non-empty PartitionFilters entry
@@ -98,6 +85,10 @@ PARTITION_PRUNING_EXPECTED = {
 # — any Exchange (hash/range/broadcast) means the co-location broke
 NO_EXCHANGE_EXPECTED = {
     "bucketed_join_zero_shuffle",
+    # the /textsearch facade carries `label` through the top-k and
+    # groups on its single output partition: no hydration join and no
+    # shuffle at all, broadcast or hashed
+    "endpoint_textsearch_grouped",
 }
 
 # queries whose plan must carry an injected runtime bloom filter
